@@ -103,7 +103,13 @@ import scala.jdk.CollectionConverters._
   *    query skips; cheaper queries behind it still measure). A
   *    shed-but-completed run's final line is `partial:true` and a
   *    shed prior is rejected by the parser, so warmup-quality
-  *    medians never become the next round's reference. */
+  *    medians never become the next round's reference.
+  *
+  * Failures: a run that throws is never a sample (its time to the
+  * exception would quote a broken query as a fast one). The query
+  * lands in `failed` (query → message), leaves `queries`, `runs` and
+  * the total, is not run again, and the artifact reads `"ok":false`;
+  * the `metric` line still prints. */
 object Bench {
   def main(args: Array[String]): Unit = {
     def loadavg: String =
@@ -216,28 +222,28 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    // pass-1 warmup samples (quarantined), measured samples, and
+    // failures — a query that throws is named under `failed` with its
+    // message and quoted nowhere else (BenchStats.RunLog)
+    val log = new BenchStats.RunLog(queries.map(_._1))
+    import log.{warm, acc, failed}
     def timeOnce(
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
+        name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+        warmup: Boolean): Unit = {
       // isolate runs from each other: eager operators persist small
       // derived results and the CacheManager matches them by
       // canonical plan, so without this a timed run can silently
       // reuse (or GC-fight with) another invocation's blocks —
       // attribution noise, not signal
       spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+      log.record(name, warmup) { fn(spark, sfDir).count() }
     }
     // the measurement statistics live in BenchStats (spec-pinned:
     // BenchStatsSpec) — trimmed median, rel+abs instability, the
     // one-sided prior cross-check that challenges STABLE-slow
     // readings, and the warmup-fallback sample selection
     import BenchStats.{unstable, robustMedian, effective}
-    // pass-1 warmup samples (quarantined) and measured samples
-    val warm = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val acc = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
-      queries.map { case (name, _) => name -> Vector.empty[Double] }: _*)
     // RAW sample selection — what the harness's own decisions
     // (escalation, divergence bookkeeping, projections) see; the
     // QUOTED medians additionally pass through the lone-sample
@@ -292,7 +298,7 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "/root/repo/bench_out.json")
     def emit(partial: Boolean): Unit = {
-      val seen = queries.map(_._1).filter(n => samplesOf(n).nonEmpty)
+      val seen = log.quotable
       // quoted median: the divergence-aware selection (a rescued
       // query quotes min(measured, warmup)); the prior_divergent
       // flag stays computed on the RAW samples so a rescue is
@@ -323,7 +329,7 @@ object Bench {
         .map(n => s"\"" + n + "\"").mkString("[", ",", "]")
       val shedJson = shed.map(s => s"\"" + s + "\"").mkString("[", ",", "]")
       val line =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs_per_query":${nPasses - 1},"max_runs":$maxRuns,"stat":"trimmed_median_interleaved","partial":$partial,"queries_measured":${seen.size},"wall_s":${fmt(wallS)},"wall_budget_s":${fmt(wallBudget)},"shed":$shedJson,"prior_divergent":$divJson,"rescued":$rescJson,"sample_filtered":$filtJson,"runs":$runsJson,"warmup":$warmJson,"loadavg_entry":"$loadEntry","load_waited_s":${fmt(loadWaited)},"loadavg_start":"$loadStart","loadavg_end":"$loadavg","sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"runs_per_query":${nPasses - 1},"max_runs":$maxRuns,"stat":"trimmed_median_interleaved","partial":$partial,"queries_measured":${seen.size},"wall_s":${fmt(wallS)},"wall_budget_s":${fmt(wallBudget)},"shed":$shedJson,"prior_divergent":$divJson,"rescued":$rescJson,"sample_filtered":$filtJson,"ok":${failed.isEmpty},"failed":${log.failedJson},"runs":$runsJson,"warmup":$warmJson,"loadavg_entry":"$loadEntry","load_waited_s":${fmt(loadWaited)},"loadavg_start":"$loadStart","loadavg_end":"$loadavg","sf":"$sfDir"}"""
       println(line)
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(outPath),
@@ -367,15 +373,14 @@ object Bench {
         }
       var i = 0
       val shedNames = scala.collection.mutable.ArrayBuffer[String]()
-      for ((name, fn) <- order if !aborted) {
+      for ((name, fn) <- order if !aborted && !failed.contains(name)) {
         if (wallS > wallBudget) {
           aborted = true
           shed += s"pass_${p}_wall_from_$name"
         } else if (p > 1 && wallS + projCost(name) > wallBudget) {
           shedNames += name
         } else {
-          val t = timeOnce(fn)
-          if (p == 1) warm(name) = t else acc(name) = acc(name) :+ t
+          timeOnce(name, fn, warmup = p == 1)
           i += 1
           if (i % 64 == 0) emit(partial = true)
         }
@@ -476,7 +481,7 @@ object Bench {
     var wallStop = false
     while (escalating && extraBudget > 0 && !wallStop) {
       val needy = queries.filter { case (name, _) =>
-        acc(name).length < maxRuns &&
+        !failed.contains(name) && acc(name).length < maxRuns &&
           (acc(name).isEmpty || divergent(name) || unstable(acc(name)))
       }
       val ordered = needy.sortBy { case (name, _) =>
@@ -492,7 +497,7 @@ object Bench {
       for ((name, fn) <- ordered if extraBudget > 0) {
         if (wallS + projCost(name) > wallBudget) skippedAny = true
         else {
-          acc(name) = acc(name) :+ timeOnce(fn)
+          timeOnce(name, fn, warmup = false)
           extraBudget -= 1
           tookAny = true
         }

@@ -18,6 +18,8 @@ package graft
   *     robust median must exceed 3× the committed prior AND sit
   *     > 0.3 s above it. One-sided by design: running FASTER than
   *     the prior is progress, never a reason to burn re-runs.
+  *   - `RunLog`: a run that throws is never a sample; its query is
+  *     quoted only under `failed`, with the message.
   */
 object BenchStats {
 
@@ -141,4 +143,43 @@ object BenchStats {
       val dropped = measured.count(m => rescueWorthy(m, w, prior))
       dropped > 0 && dropped < measured.size
     }
+
+  /** One timed run: Right(seconds) when `run` completes, Left(the
+    * error) when it throws. A failed run is never a sample — its time
+    * to the exception would read as a fast run. */
+  def timeOnce(run: => Unit): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { run; Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
+  }
+
+  /** Every run of a bench, per query: the quarantined pass-1 warmup,
+    * the measured samples and the first failure. A query with a
+    * failed run is out of [[quotable]] — the artifact's `queries`,
+    * `runs` and total — and listed only under `failed`. */
+  final class RunLog(names: Seq[String]) {
+    val warm = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val acc = scala.collection.mutable.LinkedHashMap[String, Vector[Double]](
+      names.map(_ -> Vector.empty[Double]): _*)
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+
+    /** Times `run` and files the outcome: a sample (warmup or
+      * measured) on success, the message on the first failure. */
+    def record(name: String, warmup: Boolean)(run: => Unit): Unit =
+      timeOnce(run) match {
+        case Right(t) => if (warmup) warm(name) = t else acc(name) = acc(name) :+ t
+        case Left(msg) => if (!failed.contains(name)) failed(name) = msg
+      }
+
+    /** Queries the artifact quotes: a sample and no failed run. */
+    def quotable: Seq[String] =
+      names.filter(n => !failed.contains(n) && effective(warm.get(n), acc(n)).nonEmpty)
+
+    /** `failed` as a JSON object of query → message. */
+    def failedJson: String = {
+      import scala.jdk.CollectionConverters._
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .writeValueAsString(failed.asJava)
+    }
+  }
 }

@@ -33,6 +33,10 @@ object Curation {
     *      ONLY (expected corpus/numBuckets rows) with the budget
     *      reduced by the tokens already consumed.
     *
+    * The scored input is materialized ONCE (a local checkpoint), so
+    * the caller's lineage and `quality` run once per row however many
+    * of the phases read it (CurationSpec counts the evaluations).
+    *
     * Null qualities sort after everything (the `quality.desc` window
     * order is desc_nulls_last) and get the sentinel bucket past the
     * end. Semantics are identical to the one-window spelling —
@@ -53,11 +57,17 @@ object Curation {
     // a NULL count would poison the histogram and the cumulative sum
     // differently (kept in a pre-boundary bucket, dropped by the
     // NULL-valued cum filter in the boundary bucket), making survival
-    // depend on where the cutoff lands
+    // depend on where the cutoff lands.
+    // The range aggregate, the histogram and the cut are separate
+    // actions; materialized once here, they read these blocks instead
+    // of each re-running the caller's lineage and quality expression.
+    // localCheckpoint registers nothing with the CacheManager, and its
+    // blocks go when the returned frame does.
     val toks = df
       .withColumn("_toks",
         coalesce(TextFunctions.tokenCount(col(textCol)), lit(0L)))
       .withColumn("_q", quality.cast("double"))
+      .localCheckpoint(eager = true)
     // phase 1: quality range. When the caller KNOWS the score's range
     // (bounded scores like qualityScore's [0,1] usually do), pass it
     // and this scan is skipped — out-of-range values clamp into the

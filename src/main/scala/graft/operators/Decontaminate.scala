@@ -13,12 +13,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the evaluation side is ALWAYS tiny relative to the
   * corpus (benchmarks are KBs–MBs; the corpus is the 100 TB side), so
-  * the distinct test-gram set broadcasts, the train side streams one
-  * n-gram explode through a broadcast semi-join, and the per-doc hit
-  * count is a partial-aggregated groupBy on the (already filtered,
-  * usually near-empty) collision stream. The corpus is never
-  * shuffled; row bodies move only in the final keep/drop semi-join
-  * keyed on the id. */
+  * its distinct gram set broadcasts. The report streams one n-gram
+  * explode of the corpus through a broadcast semi-join and counts the
+  * (usually near-empty) collision stream with a partial-aggregated
+  * groupBy; the removal is one narrow per-row filter against the
+  * broadcast set. Neither shuffles the corpus or moves a row body. */
 object Decontaminate {
 
   private def ngramsUdf(n: Int) = udf((t: String) =>
@@ -54,22 +53,43 @@ object Decontaminate {
       .withColumn("contaminated", col("n_shared") > 0)
   }
 
-  /** The enforcement end: keep only clean training rows. One
-    * broadcast-semi-join gram pass to find contaminated ids, one
-    * anti join keyed on the id to drop them — document bodies are
-    * read once and never shuffled. */
+  /** The enforcement end: keep only clean training rows. The
+    * contract is ROW-level: a row is dropped iff its own `trainText`
+    * shares a word n-gram with the evaluation set (null or shorter-
+    * than-n text is clean). That equals dropping the ids
+    * [[contaminationReport]] flags whenever `trainId` is unique; rows
+    * that share an id are judged separately, and `trainId` itself is
+    * never read.
+    *
+    * One narrow filter: each row's grams are tested against a
+    * broadcast of the evaluation side's distinct grams, so the corpus
+    * is read once, never shuffled, and a streaming frame is screened
+    * the same way with zero state
+    * ([[graft.streaming.Streams.decontaminateStream]] is this call).
+    * The broadcast is bounded LOUDLY: the distinct grams are fetched
+    * with `limit(maxTestGrams + 1)`, so more than `maxTestGrams` of
+    * them fail the call before any corpus row is read, and no more
+    * than that many ever reach the driver. */
   def removeContaminated(
       train: DataFrame,
       trainId: String,
       trainText: String,
       test: DataFrame,
       testText: String,
-      n: Int = 8): DataFrame = {
-    val testGrams = testGramSet(test, testText, n)
-    val dirty = grams(train, trainId, trainText, n)
-      .join(broadcast(testGrams), Seq("g"), "left_semi")
-      .select("id").distinct()
-    train.join(dirty, train(trainId) === dirty("id"), "left_anti")
+      n: Int = 8,
+      maxTestGrams: Int = 10000000): DataFrame = {
+    val fetched = testGramSet(test, testText, n)
+      .limit(maxTestGrams + 1).collect()
+    require(fetched.length <= maxTestGrams,
+      s"decontamination: the test set has more than " +
+        s"maxTestGrams=$maxTestGrams distinct n-grams — it must be " +
+        "benchmark-sized (KBs-MBs); for corpus-vs-corpus overlap use " +
+        "Boilerplate.sourceOverlap instead")
+    val testGrams: Set[String] = fetched.iterator.map(_.getString(0)).toSet
+    val bc = train.sparkSession.sparkContext.broadcast(testGrams)
+    val clean = udf((t: String) =>
+      t == null || !Kernels.wordNgrams(t, n).exists(bc.value.contains))
+    train.filter(clean(col(trainText)))
   }
 
   /** Bloom-prefiltered contamination candidates + the exact verify
@@ -122,8 +142,10 @@ object Decontaminate {
       .withColumn("contaminated", col("n_shared") > 0)
   }
 
-  /** [[removeContaminated]] through the same Bloom pre-pass; output
-    * rows identical (spec-pinned). */
+  /** Id-level removal through the Bloom pre-pass: drops every row
+    * whose `trainId` [[contaminationReportBloom]] flags, so it keeps
+    * the rows [[removeContaminated]] keeps whenever `trainId` is
+    * unique (spec-pinned). */
   def removeContaminatedBloom(
       train: DataFrame,
       trainId: String,

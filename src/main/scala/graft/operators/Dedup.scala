@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -666,12 +666,13 @@ object Dedup {
     * chains raise `maxIter` (the require makes non-convergence loud,
     * never silent).
     *
-    * Small graphs short-circuit to driver-side union-find — same
-    * design as [[duplicateClustersIncremental]]'s remap, but sized by
-    * a BOUNDED fetch rather than a separate count: `limit(max+1)`
-    * collects at most maxDriverEdges+1 narrow rows in ONE job; if
-    * everything arrived, those ARE the edges (zero iterative jobs),
-    * else the distributed min-label loop runs as before. Near-dup
+    * Small graphs short-circuit to driver-side union-find
+    * ([[driverRemap]], shared with [[duplicateClustersIncremental]]
+    * and [[resolveDuplicates]]), sized by a BOUNDED fetch rather than
+    * a separate count: `limit(max+1)` collects at most
+    * maxDriverEdges+1 narrow rows in ONE job; if everything arrived,
+    * those ARE the edges (zero iterative jobs), else the distributed
+    * min-label loop runs. Near-dup
     * pair sets are tiny next to their corpora, so at fixture AND
     * production scale the common case is the short-circuit, and the
     * fallback is the one that must exist, loudly bounded, for the
@@ -694,12 +695,39 @@ object Dedup {
       maxDriverEdges: Int = 1 << 20): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
-    val edgePairs = pairs.select(col("id_a").cast("long"),
-      col("id_b").cast("long")).as[(Long, Long)]
-    val fetched = edgePairs.limit(maxDriverEdges + 1).collect()
-    if (fetched.length <= maxDriverEdges) {
-      val idName0 = ids.columns.head
-      val base = ids.select(col(idName0).cast("long").as("id")).distinct()
+    driverRemap(edgeList(pairs), maxDriverEdges) match {
+      case Some(remap) =>
+        val base = ids.select(col(ids.columns.head).cast("long").as("id"))
+          .distinct()
+        val rm = remap.toDF("_old", "_new")
+        base.join(rm, base("id") === rm("_old"), "left")
+          .select(col("id"), coalesce(col("_new"), col("id")).as("cluster_id"))
+      case None => labelPropagation(ids, pairs, maxIter, checkpointDir)
+    }
+  }
+
+  /** The pair graph as (id_a, id_b) longs — the edge list both
+    * cluster paths read. */
+  private def edgeList(pairs: DataFrame): Dataset[(Long, Long)] = {
+    import pairs.sparkSession.implicits._
+    pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .as[(Long, Long)]
+  }
+
+  /** Driver-side union-find, sized by a BOUNDED fetch rather than a
+    * separate count: `limit(max+1)` collects at most maxDriverEdges+1
+    * narrow rows in ONE job. If everything arrived, those ARE the
+    * edges, and the result is the non-root → root remap: every node
+    * whose component minimum is not itself, bridge endpoints
+    * included (union-by-min keeps every root the component minimum —
+    * the canonical labels the min-label loop converges to). None
+    * when the graph is larger than the bound. */
+  private def driverRemap(
+      edges: Dataset[(Long, Long)],
+      maxDriverEdges: Int): Option[Seq[(Long, Long)]] = {
+    val fetched = edges.limit(maxDriverEdges + 1).collect()
+    if (fetched.length > maxDriverEdges) None
+    else {
       val parent = new scala.collection.mutable.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -710,19 +738,24 @@ object Dedup {
         }
         r
       }
-      // union-by-min keeps every root the component minimum — the same
-      // canonical labels the min-label loop converges to
       fetched.foreach { case (a, b) =>
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val remap = parent.keys.toSeq
+      Some(parent.keys.toSeq
         .map(l => l -> find(l))
-        .filter { case (id, root) => id != root }
-        .toDF("_old", "_new")
-      return base.join(remap, base("id") === remap("_old"), "left")
-        .select(col("id"), coalesce(col("_new"), col("id")).as("cluster_id"))
+        .filter { case (id, root) => id != root })
     }
+  }
+
+  /** The distributed side of [[duplicateClusters]]: iterative
+    * min-label propagation over ids ∪ pair endpoints. */
+  private def labelPropagation(
+      ids: DataFrame,
+      pairs: DataFrame,
+      maxIter: Int,
+      checkpointDir: Option[String]): DataFrame = {
+    val spark = ids.sparkSession
     // iterative plans MUST be truncated each round (else the lineage
     // and analysis cost grow per iteration). localCheckpoint is the
     // zero-setup default for local/fixture runs; pass `checkpointDir`
@@ -844,34 +877,15 @@ object Dedup {
     // the identical min-label remap (DedupSpec runs the equality
     // property through each).
     val boundInt = math.min(maxDriverEdges, (Int.MaxValue - 1).toLong).toInt
-    val fetched = lblEdges.as[(Long, Long)].limit(boundInt + 1).collect()
-    val remap: DataFrame =
-      if (fetched.length <= boundInt) {
-        val parent = new scala.collection.mutable.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x // path compression
-          while (parent.getOrElse(c, c) != c) {
-            val next = parent(c); parent(c) = r; c = next
-          }
-          r
-        }
-        fetched.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        parent.keys.toSeq
-          .map(l => l -> find(l))
-          .filter { case (old, root) => old != root }
-          .toDF("_old", "_new")
-      } else {
+    val remap: DataFrame = driverRemap(edgeList(lblEdges), boundInt) match {
+      case Some(rm) => rm.toDF("_old", "_new")
+      case None =>
         val touched = lblEdges.select(col("id_a").as("l"))
           .unionAll(lblEdges.select(col("id_b").as("l"))).distinct()
-        duplicateClusters(touched, lblEdges, maxIter, checkpointDir)
+        labelPropagation(touched, lblEdges, maxIter, checkpointDir)
           .select(col("id").as("_old"), col("cluster_id").as("_new"))
           .filter(col("_old") =!= col("_new"))
-      }
+    }
     base.join(remap, base("cluster_id") === remap("_old"), "left")
       .select(col("id"),
         coalesce(col("_new"), col("cluster_id")).as("cluster_id"))
@@ -971,19 +985,44 @@ object Dedup {
   }
 
   /** Apply cluster labels back to the data: keep exactly the rows
-    * whose id IS its cluster's representative (the min id). The
-    * "delete the duplicates" end of the pair→cluster pipeline:
-    * pairs = any candidate generator, clusters = [[duplicateClusters]],
-    * and the final semi join keys on the id — one shuffle of ids, row
-    * bodies move once. */
+    * whose id IS its [[duplicateClusters]] label (the component's min
+    * id, bridge endpoints included) — the "delete the duplicates" end
+    * of the pair→cluster pipeline, for pairs from any candidate
+    * generator. A null id has a null label and is dropped.
+    *
+    * When the pair graph fits the driver bound, the driver union-find
+    * already names every dropped id — the non-roots — so `df` is read
+    * ONCE, through an anti-join against their broadcast: no cluster
+    * frame is built from `df`'s ids and joined back. Larger graphs
+    * label `df`'s ids with the distributed loop and semi-join the
+    * roots back. DedupSpec pins both paths to the label definition. */
   def resolveDuplicates(
       df: DataFrame,
       idCol: String,
       pairs: DataFrame,
-      maxIter: Int = 20): DataFrame = {
-    val clusters = duplicateClusters(df.select(idCol), pairs, maxIter)
-    val keep = clusters.filter(col("id") === col("cluster_id")).select("id")
-    df.join(keep, df(idCol) === keep("id"), "left_semi")
+      maxIter: Int = 20): DataFrame =
+    resolveDuplicatesBounded(df, idCol, pairs, maxIter, 1 << 20)
+
+  /** [[resolveDuplicates]] with the driver edge bound exposed, so a
+    * spec can force the distributed path. */
+  private[operators] def resolveDuplicatesBounded(
+      df: DataFrame,
+      idCol: String,
+      pairs: DataFrame,
+      maxIter: Int,
+      maxDriverEdges: Int): DataFrame = {
+    import df.sparkSession.implicits._
+    driverRemap(edgeList(pairs), maxDriverEdges) match {
+      case Some(remap) =>
+        val nonRoot = remap.map(_._1).toDF("_non_root")
+        df.filter(col(idCol).cast("long").isNotNull)
+          .join(broadcast(nonRoot), df(idCol) === nonRoot("_non_root"),
+            "left_anti")
+      case None =>
+        val keep = labelPropagation(df.select(idCol), pairs, maxIter, None)
+          .filter(col("id") === col("cluster_id")).select("id")
+        df.join(keep, df(idCol) === keep("id"), "left_semi")
+    }
   }
 
   /** [[resolveDuplicates]] with a QUALITY policy: keep each cluster's

@@ -190,53 +190,20 @@ object Streams {
   /** Streaming decontamination: a live document feed screened against
     * a fixed held-out benchmark set. The decision is LOCAL to each
     * document (does any of its n-grams hit the benchmark gram set?),
-    * so the streaming spelling is a pure per-row filter against a
-    * broadcast of the static side's distinct grams — ZERO streaming
-    * state, no watermark, no shuffle, no matter how long the stream
-    * runs. The collect of the gram set is bounded by the same
-    * contract as [[graft.operators.Decontaminate]]: benchmarks are
-    * KBs–MBs next to the corpus (the batch operator broadcasts the
-    * identical set through the join layer instead). Works identically
-    * on a batch input — StreamsSpec pins stream == batch ==
-    * Decontaminate.removeContaminated. */
+    * so this is [[graft.operators.Decontaminate.removeContaminated]]
+    * itself — a pure per-row filter against a broadcast of the static
+    * side's distinct grams, with its loud `maxTestGrams` bound: ZERO
+    * streaming state, no watermark, no shuffle, no matter how long the
+    * stream runs. StreamsSpec pins stream == batch. */
   def decontaminateStream(
       docs: DataFrame,
       textCol: String,
       staticTest: DataFrame,
       testTextCol: String,
       n: Int = 8,
-      maxTestGrams: Int = 10000000): DataFrame = {
-    import graft.operators.Kernels
-    // the bounded-benchmark contract, made LOUD (the exactSelfTopK
-    // guard discipline) — and checked DISTRIBUTED, BEFORE anything is
-    // collected: a guard that fires only after a corpus-sized gram
-    // set already landed on the driver would arrive as the OOM it
-    // exists to prevent. One extra pass over the (tiny by contract)
-    // test set buys the fail-fast.
-    val gramsUdf = udf((t: String) =>
-      if (t == null) Array.empty[String] else Kernels.wordNgrams(t, n))
-    val nGrams = staticTest
-      .select(explode(gramsUdf(col(testTextCol))).as("g"))
-      .distinct().count()
-    require(nGrams <= maxTestGrams,
-      s"decontaminateStream: test set has $nGrams distinct n-grams > " +
-        s"maxTestGrams=$maxTestGrams — the test set must be benchmark-sized " +
-        "(KBs-MBs); for corpus-vs-corpus overlap use Decontaminate/" +
-        "Boilerplate.sourceOverlap instead")
-    val testGrams: Set[String] = staticTest
-      .select(col(testTextCol).as("t"))
-      .na.drop(Seq("t"))
-      .collect()
-      .iterator
-      .flatMap(r => Kernels.wordNgrams(r.getString(0), n))
-      .toSet
-    System.err.println(
-      s"[graft] decontaminateStream broadcasting ${testGrams.size} test grams")
-    val bc = docs.sparkSession.sparkContext.broadcast(testGrams)
-    val clean = udf((t: String) =>
-      t == null || !Kernels.wordNgrams(t, n).exists(bc.value.contains))
-    docs.filter(clean(col(textCol)))
-  }
+      maxTestGrams: Int = 10000000): DataFrame =
+    graft.operators.Decontaminate.removeContaminated(
+      docs, textCol, textCol, staticTest, testTextCol, n, maxTestGrams)
 
   /** Quality routing decision: `keep` / `review` / `reject` from the
     * [[graft.functions.TextFunctions.qualityScore]] heuristic. A pure

@@ -135,4 +135,26 @@ class BenchStatsSpec extends AnyFunSuite {
     assert(!quoteRescued(None, Seq(9.0), Some(1.0)))
     assert(!partiallyFiltered(None, Seq(9.0), Some(1.0)))
   }
+
+  test("RunLog: a throwing run lands in failed, never in the quoted queries or runs") {
+    val log = new RunLog(Seq("q1", "q2", "q3"))
+    for (q <- Seq("q1", "q2")) log.record(q, warmup = true)(())
+    log.record("q1", warmup = false)(())
+    log.record("q2", warmup = false)(
+      throw new IllegalArgumentException("recall 0.21 < floor \"0.35\""))
+    log.record("q3", warmup = true)(throw new IllegalStateException("first"))
+    log.record("q3", warmup = false)(throw new IllegalStateException("second"))
+    assert(log.quotable == Seq("q1"))
+    assert(log.acc("q1").size == 1)
+    assert(log.acc("q2").isEmpty && log.acc("q3").isEmpty)
+    assert(!log.warm.contains("q3"))
+    // the first failure is the one named; messages survive as JSON
+    val failed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(log.failedJson)
+    assert(failed.size == 2)
+    assert(failed.get("q2").asText ==
+      "java.lang.IllegalArgumentException: recall 0.21 < floor \"0.35\"")
+    assert(failed.get("q3").asText == "java.lang.IllegalStateException: first")
+    assert(timeOnce(()).exists(_ >= 0.0))
+  }
 }

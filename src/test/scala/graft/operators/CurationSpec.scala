@@ -374,4 +374,24 @@ class CurationSpec extends AnyFunSuite {
         minWords = 10L, maxWords = 5L)
     }
   }
+
+  test("tokenBudgetSelect reads its input once and caches nothing") {
+    import spark.implicits._
+    val rows = (0L until 200L).map(id => (id, (id % 17).toInt, Some((id % 7) / 7.0)))
+    val budget = 300L // well inside the corpus: the boundary-bucket cut runs
+    spark.catalog.clearCache()
+    for (range <- Seq(None, Some((0.0, 1.0)))) {
+      val calls = spark.sparkContext.longAccumulator("quality evaluations")
+      val counted = udf { (q: java.lang.Double) => calls.add(1L); q }
+      val kept = Curation.tokenBudgetSelect(
+        corpus(rows), "doc_id", "text", budget, counted(col("q")),
+        numBuckets = 8, qualityRange = range)
+        .select("doc_id").as[Long].collect().toSet
+      assert(kept == reference(rows, budget))
+      assert(calls.value == rows.size.toLong,
+        s"quality evaluated ${calls.value} times for ${rows.size} rows (range $range)")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "tokenBudgetSelect registered a CacheManager entry")
+  }
 }

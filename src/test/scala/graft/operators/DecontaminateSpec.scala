@@ -149,4 +149,37 @@ class DecontaminateSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("maxBench"))
   }
+
+  test("removeContaminated is row-level: rows sharing an id are judged separately") {
+    val dupIds = Seq(
+      (1L, "the quick brown fox sleeps"),     // shares grams with 100
+      (1L, "completely clean training text"), // same id, clean text
+      (2L, "completely clean training text")
+    ).toDF("doc_id", "text")
+    val kept = Decontaminate.removeContaminated(
+      dupIds, "doc_id", "text", heldout, "text", n = 3)
+      .as[(Long, String)].collect().toSet
+    assert(kept == Set(
+      (1L, "completely clean training text"),
+      (2L, "completely clean training text")))
+    // the id-level report flags id 1 as a whole; with unique ids the
+    // two contracts agree (the fixture test above)
+    val flagged = Decontaminate.contaminationReport(
+      dupIds, "doc_id", "text", heldout, "text", n = 3)
+      .filter(col("contaminated")).select("id").as[Long].collect().toSet
+    assert(flagged == Set(1L))
+  }
+
+  test("removeContaminated: the test-gram bound fails loudly, at the call") {
+    // heldout has 3 + 3 = 6 distinct 3-grams
+    val e = intercept[IllegalArgumentException] {
+      Decontaminate.removeContaminated(
+        train, "doc_id", "text", heldout, "text", n = 3, maxTestGrams = 5)
+    }
+    assert(e.getMessage.contains("maxTestGrams=5"))
+    val kept = Decontaminate.removeContaminated(
+      train, "doc_id", "text", heldout, "text", n = 3, maxTestGrams = 6)
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept == Set(2L, 4L))
+  }
 }

@@ -918,4 +918,42 @@ class DedupSpec extends AnyFunSuite {
         maxBucketDocs = 2L)
     }
   }
+
+  test("resolveDuplicates property: keeps a row iff its id is its cluster label, on both paths") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // df holds ids 10..49, one id twice and one null id; pair
+    // endpoints range over 0..49, so 0..9 are bridges absent from df
+    // (and can be a component's label), and ids no pair touches are
+    // singletons
+    val dfRows: Seq[(Option[Long], String)] =
+      (10L until 50L).map(id => (Some(id), s"doc $id")) ++
+        Seq((Some(17L), "doc 17 again"), (None, "no id"))
+    val df = dfRows.toDF("doc_id", "text")
+    (0 until 3).foreach { i =>
+      val edgeGen = Gen.zip(Gen.choose(0L, 49L), Gen.choose(0L, 49L))
+      val raw = Gen.listOfN(30, edgeGen)
+        .apply(Gen.Parameters.default, Seed(131L + i)).get
+        .filter { case (a, b) => a != b }
+      val pairs = raw.toDF("id_a", "id_b")
+      // reference labels: plain-Scala components over 0..49, each
+      // labeled by its minimum member
+      val parent = Array.tabulate(50)(identity)
+      def find(x: Int): Int = if (parent(x) == x) x else find(parent(x))
+      raw.foreach { case (a, b) =>
+        val (ra, rb) = (find(a.toInt), find(b.toInt))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val expected = dfRows
+        .collect { case (Some(id), t) if find(id.toInt) == id => (id, t) }
+        .sorted
+      assert(expected.size < 41, s"seed ${131 + i}: no duplicates planted")
+      // maxDriverEdges = 0 forces the distributed label loop
+      for (bound <- Seq(1 << 20, 0)) {
+        val got = Dedup.resolveDuplicatesBounded(df, "doc_id", pairs, 20, bound)
+          .as[(Long, String)].collect().toSeq.sorted
+        assert(got == expected, s"seed ${131 + i} maxDriverEdges=$bound")
+      }
+    }
+  }
 }
